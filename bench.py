@@ -780,7 +780,9 @@ def main() -> None:
     # sf + cpus, last 20 records) catches it. Advisory, recorded in
     # bench_last.json + the history ledger only — the stdout contract
     # is unchanged.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from extract_permits_spark.session import default_parallelism
+
+    cpus = default_parallelism()
     hist_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "bench_history.jsonl"
     )

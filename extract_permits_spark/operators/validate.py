@@ -45,19 +45,14 @@ def partition_valid(
     df: DataFrame,
     specs: Sequence[ColumnSpec] = PERMIT_COLUMNS,
     extra_error: Column | None = None,
-    cache: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """E1: two-way split → (upload_df, review_df).
 
     Reference: partition_permits chicago/permit_cleaning.py:427-452.
-    Both outputs share one parent plan; ``cache=True`` persists the
-    validated parent so consuming both halves scans the input once
-    (the write-side alternative is one job partitioned by bucket,
-    sinks/writers.split_write).
+    Both outputs share one parent plan (the single-scan write-side
+    alternative is sinks/writers.split_write).
     """
     validated = with_validation(df, specs, extra_error)
-    if cache:
-        validated = validated.persist()
     upload = validated.where(~F.col("has_error")).drop("has_error", "errors")
     review = validated.where(F.col("has_error"))
     return upload, review

@@ -2201,42 +2201,37 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch run would conclude, the invariant that makes ingest-time
     scoring trustworthy."""
     import os
-    import shutil
-    import tempfile
 
+    from extract_permits_spark.functions.similarity import minhash_md5_bands
     from extract_permits_spark.streaming.neardup_ingest import (
-        run_neardup_ingest_available_now,
+        score_batch_against_index,
     )
+    from extract_permits_spark.streaming.util import run_file_ingest, stage_batches
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     static_docs = d.where(F.col("doc_id") % 4 != 0)
     new_docs = d.where(F.col("doc_id") % 4 == 0)
 
     work = scratch_dir("stream_neardup_")
-    src = os.path.join(work, "in")
-    os.makedirs(src)
-    # two files -> two micro-batches under maxFilesPerTrigger=1
-    new_docs.where((F.col("doc_id") / 4).cast("long") % 2 == 0).coalesce(
-        1
-    ).write.parquet(os.path.join(src, "f0"))
-    new_docs.where((F.col("doc_id") / 4).cast("long") % 2 == 1).coalesce(
-        1
-    ).write.parquet(os.path.join(src, "f1"))
-    for sub in ("f0", "f1"):
-        for fn in os.listdir(os.path.join(src, sub)):
-            if fn.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(src, sub, fn),
-                    os.path.join(src, f"{sub}.parquet"),
-                )
-        shutil.rmtree(os.path.join(src, sub), ignore_errors=True)
-
-    out = os.path.join(work, "out")
-    q, static_bands = run_neardup_ingest_available_now(
-        spark, src, static_docs, os.path.join(work, "ckpt"), out_path=out
+    src, out = os.path.join(work, "in"), os.path.join(work, "out")
+    # two files -> two micro-batches
+    stage_batches(
+        [
+            new_docs.where((F.col("doc_id") / 4).cast("long") % 2 == h)
+            for h in (0, 1)
+        ],
+        src,
     )
-    await_or_raise(q, 300)
-    static_bands.unpersist()
+    # the static band index is built once, before the stream starts
+    static_bands = minhash_md5_bands(static_docs).persist()
+    try:
+        static_bands.count()
+        run_file_ingest(
+            spark, src, d.schema, os.path.join(work, "ckpt"), out,
+            score=lambda b: score_batch_against_index(b, static_bands),
+        )
+    finally:
+        static_bands.unpersist()
     # project off the idempotency partition key — the oracle is the batch
     # scoring contract, which has no notion of micro-batches
     return spark.read.parquet(out).select("doc_id", "is_neardup")

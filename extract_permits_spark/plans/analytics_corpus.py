@@ -624,40 +624,31 @@ def stream_decontaminate_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline gate contamination at ingest time instead of re-scanning
     the corpus before every training run."""
     import os
-    import shutil
-    import tempfile
 
     from extract_permits_spark.streaming.decontaminate_ingest import (
-        run_decontaminate_ingest_available_now,
+        _grams,
+        score_batch_against_eval_grams,
     )
+    from extract_permits_spark.streaming.util import run_file_ingest, stage_batches
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     eval_docs = d.where(F.col("doc_id") % 10 == 0)
     train = d.where(F.col("doc_id") % 10 != 0)
 
     work = scratch_dir("stream_decon_")
-    src = os.path.join(work, "in")
-    os.makedirs(src)
-    # two files -> two micro-batches under maxFilesPerTrigger=1
-    for half, fname in ((0, "f0"), (1, "f1")):
-        train.where((F.col("doc_id") % 2) == half).coalesce(1).write.parquet(
-            os.path.join(src, fname)
+    src, out = os.path.join(work, "in"), os.path.join(work, "out")
+    # two files -> two micro-batches
+    stage_batches([train.where(F.col("doc_id") % 2 == h) for h in (0, 1)], src)
+    # the eval n-gram index is built once, before the stream starts
+    eval_grams = _grams(eval_docs, 5).select("g").distinct().persist()
+    try:
+        eval_grams.count()
+        run_file_ingest(
+            spark, src, d.schema, os.path.join(work, "ckpt"), out,
+            score=lambda b: score_batch_against_eval_grams(b, eval_grams),
         )
-    for sub in ("f0", "f1"):
-        for fn in os.listdir(os.path.join(src, sub)):
-            if fn.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(src, sub, fn),
-                    os.path.join(src, f"{sub}.parquet"),
-                )
-        shutil.rmtree(os.path.join(src, sub), ignore_errors=True)
-
-    out = os.path.join(work, "out")
-    q, eval_grams = run_decontaminate_ingest_available_now(
-        spark, src, eval_docs, os.path.join(work, "ckpt"), out_path=out
-    )
-    await_or_raise(q, 300)
-    eval_grams.unpersist()
+    finally:
+        eval_grams.unpersist()
     # project off the idempotency partition key — the oracle is the batch
     # decontamination contract, which has no notion of micro-batches
     return spark.read.parquet(out).select(
@@ -684,39 +675,24 @@ def stream_semantic_decon_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     are batch_id-scoped dynamic-partition overwrites (idempotent under
     foreachBatch replay)."""
     import os
-    import shutil
-    import tempfile
 
     from extract_permits_spark.streaming.semantic_decon_ingest import (
-        run_semantic_decon_ingest_available_now,
+        score_batch_against_eval,
     )
+    from extract_permits_spark.streaming.util import run_file_ingest, stage_batches
 
     emb = load_table(spark, sf_dir, "embeddings")
     ev = emb.where(F.col("vec_id") % 10 == 0)
     tr = emb.where(F.col("vec_id") % 10 != 0)
 
     work = scratch_dir("stream_semdecon_")
-    src = os.path.join(work, "in")
-    os.makedirs(src)
-    # two files -> two micro-batches under maxFilesPerTrigger=1
-    for half, fname in ((0, "f0"), (1, "f1")):
-        tr.where((F.col("vec_id") % 2) == half).coalesce(1).write.parquet(
-            os.path.join(src, fname)
-        )
-    for sub in ("f0", "f1"):
-        for fn in os.listdir(os.path.join(src, sub)):
-            if fn.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(src, sub, fn),
-                    os.path.join(src, f"{sub}.parquet"),
-                )
-        shutil.rmtree(os.path.join(src, sub), ignore_errors=True)
-
-    out = os.path.join(work, "out")
-    q = run_semantic_decon_ingest_available_now(
-        spark, src, ev, os.path.join(work, "ckpt"), out, min_cosine=0.35
+    src, out = os.path.join(work, "in"), os.path.join(work, "out")
+    # two files -> two micro-batches
+    stage_batches([tr.where(F.col("vec_id") % 2 == h) for h in (0, 1)], src)
+    run_file_ingest(
+        spark, src, emb.schema, os.path.join(work, "ckpt"), out,
+        score=lambda b: score_batch_against_eval(b, ev, min_cosine=0.35),
     )
-    await_or_raise(q, 300)
     return spark.read.parquet(out).select(
         "vec_id", "n_hits", "is_contaminated"
     )
@@ -1126,11 +1102,9 @@ def emb_ivfpq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan — test_plan_quality pins both). Rankings are bitwise-equal to
     the in-memory path by construction (same kernel, same distance
     tables, same fold order), so the oracle is the same full IVFADC
-    replay emb_ivfpq_topk proves. The 20-row result is materialized to
-    a table because the index lives in a temp dir."""
+    replay emb_ivfpq_topk proves. The 20-row result is materialized in
+    the entry's scratch dir next to the index."""
     import os
-    import shutil
-    import tempfile
 
     from extract_permits_spark.functions.pq import (
         ivfpq_topk_from_index,
@@ -1147,8 +1121,7 @@ def emb_ivfpq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = scratch_dir("ivfpq_serve_")
     idx = os.path.join(work, "index")
     write_ivfpq_index(emb, book, centroids, idx)
-    tag = abs(hash(sf_dir)) % 10**8
-    table = f"ivfpq_served_{tag}"
+    top = os.path.join(work, "top")
     (
         ivfpq_topk_from_index(
             spark, idx, book, centroids, raw, num_probes=6, topk=20
@@ -1159,13 +1132,9 @@ def emb_ivfpq_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "codes",
             "adc_dist",
         )
-        .write.mode("overwrite")
-        .saveAsTable(table)
+        .write.parquet(top)
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.sql(
-        f"SELECT vec_id, cluster_id, codes, adc_dist FROM {table}"
-    )
+    return spark.read.parquet(top)
 
 
 @register("stream_ann_index_ingest", _ann_sql.ivfpq_codes_sql())
@@ -1182,40 +1151,30 @@ def stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied batch, or any encode drift between the streaming and batch
     paths hash-mismatches."""
     import os
-    import shutil
-    import tempfile
 
-    from extract_permits_spark.streaming.ann_index_ingest import (
-        run_index_ingest_available_now,
-    )
+    from extract_permits_spark.functions.pq import _assign_codes_arrow
+    from extract_permits_spark.streaming.ann_index_ingest import encode_batch
+    from extract_permits_spark.streaming.util import run_file_ingest
 
     emb = load_table(spark, sf_dir, "embeddings")
     book = _pq_book_cached(spark, emb, sf_dir)
     centroids = _ivf_centroids_cached(spark, emb, sf_dir)
+    kern = _assign_codes_arrow(book, centroids)
     work = scratch_dir("ann_index_stream_")
-    src = os.path.join(work, "in")
+    src, idx = os.path.join(work, "in"), os.path.join(work, "index")
     emb.repartition(4).write.parquet(src)
-    idx = os.path.join(work, "index")
-    q = run_index_ingest_available_now(
-        spark, src, book, centroids, idx, os.path.join(work, "ckpt")
+    run_file_ingest(
+        spark, src, emb.schema, os.path.join(work, "ckpt"), idx,
+        score=lambda b: encode_batch(b, kern),
+        partition_by=("cluster_id",),
     )
-    await_or_raise(q, 300)
-    tag = abs(hash(sf_dir)) % 10**8
-    table = f"ann_index_ingested_{tag}"
-    (
-        spark.read.parquet(idx)
-        .select(
-            "vec_id",
-            F.col("cluster_id").cast("int").alias("cluster_id"),
-            F.array_join(
-                F.transform("code_arr", lambda c: c.cast("string")), "-"
-            ).alias("codes"),
-        )
-        .write.mode("overwrite")
-        .saveAsTable(table)
+    return spark.read.parquet(idx).select(
+        "vec_id",
+        F.col("cluster_id").cast("int").alias("cluster_id"),
+        F.array_join(
+            F.transform("code_arr", lambda c: c.cast("string")), "-"
+        ).alias("codes"),
     )
-    shutil.rmtree(work, ignore_errors=True)
-    return spark.sql(f"SELECT vec_id, cluster_id, codes FROM {table}")
 
 
 @register("emb_ivfpq_recall", _ann_sql.ivfpq_recall_sql(num_probes=6))
@@ -2759,43 +2718,21 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from extract_permits_spark.functions.text import hll_estimate_from_registers
     from extract_permits_spark.streaming.hll_ingest import (
+        batch_registers,
         merged_registers,
-        run_hll_ingest_available_now,
     )
+    from extract_permits_spark.streaming.util import run_file_ingest, stage_batches
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     work = scratch_dir("stream_hll_")
-    src = os.path.join(work, "in")
-    os.makedirs(src)
-    # two files -> two micro-batches under maxFilesPerTrigger=1
-    for half, fname in ((0, "f0"), (1, "f1")):
-        d.where((F.col("doc_id") % 2) == half).coalesce(1).write.parquet(
-            os.path.join(src, fname)
-        )
-    import shutil
-
-    for sub in ("f0", "f1"):
-        for fn in os.listdir(os.path.join(src, sub)):
-            if fn.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(src, sub, fn),
-                    os.path.join(src, f"{sub}.parquet"),
-                )
-        shutil.rmtree(os.path.join(src, sub), ignore_errors=True)
-
-    out = os.path.join(work, "regs")
-    q = run_hll_ingest_available_now(
-        spark, src, os.path.join(work, "ckpt"), out
+    src, out = os.path.join(work, "in"), os.path.join(work, "regs")
+    # two files -> two micro-batches
+    stage_batches([d.where(F.col("doc_id") % 2 == h) for h in (0, 1)], src)
+    run_file_ingest(
+        spark, src, d.schema, os.path.join(work, "ckpt"), out,
+        score=batch_registers,
     )
-    await_or_raise(q, 300)
-
-    regs = merged_registers(spark, out)
-    # land the merged registers in a managed table before the scratch
-    # dir's atexit cleanup could outrun a lazy read (same hygiene as
-    # stream_phash_ingest)
-    tbl = f"stream_hll_regs_{abs(hash(sf_dir)) % 10**8}"
-    regs.write.mode("overwrite").saveAsTable(tbl)
-    estimate = hll_estimate_from_registers(spark.table(tbl))
+    estimate = hll_estimate_from_registers(merged_registers(spark, out))
     exact = d.agg(
         F.countDistinct(F.coalesce(F.col("text"), F.lit(""))).cast("long").alias("n_exact")
     )
@@ -2821,38 +2758,24 @@ def stream_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness here (an appended replay would double-count), where the
     HLL gate would survive even a raw append."""
     import os
-    import shutil
 
     from extract_permits_spark.streaming.cm_ingest import (
+        batch_sketch,
         cm_bucket,
         merged_sketch,
-        run_cm_ingest_available_now,
     )
+    from extract_permits_spark.streaming.util import run_file_ingest, stage_batches
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     work = scratch_dir("stream_cm_")
-    src = os.path.join(work, "in")
-    os.makedirs(src)
-    for half, fname in ((0, "f0"), (1, "f1")):
-        d.where((F.col("doc_id") % 2) == half).coalesce(1).write.parquet(
-            os.path.join(src, fname)
-        )
-    for sub in ("f0", "f1"):
-        for fn in os.listdir(os.path.join(src, sub)):
-            if fn.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(src, sub, fn),
-                    os.path.join(src, f"{sub}.parquet"),
-                )
-        shutil.rmtree(os.path.join(src, sub), ignore_errors=True)
-
-    out = os.path.join(work, "cm")
-    q = run_cm_ingest_available_now(spark, src, os.path.join(work, "ckpt"), out)
-    await_or_raise(q, 300)
-
-    tbl = f"stream_cm_sketch_{abs(hash(sf_dir)) % 10**8}"
-    merged_sketch(spark, out).write.mode("overwrite").saveAsTable(tbl)
-    cm = spark.table(tbl)
+    src, out = os.path.join(work, "in"), os.path.join(work, "cm")
+    # two files -> two micro-batches
+    stage_batches([d.where(F.col("doc_id") % 2 == h) for h in (0, 1)], src)
+    run_file_ingest(
+        spark, src, d.schema, os.path.join(work, "ckpt"), out,
+        score=batch_sketch,
+    )
+    cm = merged_sketch(spark, out)
 
     from extract_permits_spark.functions.similarity import tokens
 
@@ -2908,42 +2831,25 @@ def stream_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     no streaming state store; a replayed batch cannot move the merge
     (partition replaced, and bottom-k is idempotent)."""
     import os
-    import shutil
 
     from extract_permits_spark.streaming.kmv_ingest import (
+        batch_bottomk,
         merged_bottomk,
-        run_kmv_ingest_available_now,
     )
+    from extract_permits_spark.streaming.util import run_file_ingest, stage_batches
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
     work = scratch_dir("stream_kmv_")
-    src = os.path.join(work, "in")
-    os.makedirs(src)
-    # two files -> two micro-batches under maxFilesPerTrigger=1
-    for half, fname in ((0, "f0"), (1, "f1")):
-        d.where((F.col("doc_id") % 2) == half).coalesce(1).write.parquet(
-            os.path.join(src, fname)
-        )
-    for sub in ("f0", "f1"):
-        for fn in os.listdir(os.path.join(src, sub)):
-            if fn.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(src, sub, fn),
-                    os.path.join(src, f"{sub}.parquet"),
-                )
-        shutil.rmtree(os.path.join(src, sub), ignore_errors=True)
-
-    out = os.path.join(work, "kmv")
-    q = run_kmv_ingest_available_now(spark, src, os.path.join(work, "ckpt"), out)
-    await_or_raise(q, 300)
-
-    # land the merged sketch in a managed table before the scratch dir's
-    # atexit cleanup could outrun a lazy read (stream_phash_ingest hygiene)
-    tbl = f"stream_kmv_mins_{abs(hash(sf_dir)) % 10**8}"
-    merged_bottomk(spark, out).write.mode("overwrite").saveAsTable(tbl)
-    mins = spark.table(tbl)
+    src, out = os.path.join(work, "in"), os.path.join(work, "kmv")
+    # two files -> two micro-batches
+    stage_batches([d.where(F.col("doc_id") % 2 == h) for h in (0, 1)], src)
+    run_file_ingest(
+        spark, src, d.schema, os.path.join(work, "ckpt"), out,
+        score=batch_bottomk,
+    )
+    mins = merged_bottomk(spark, out)
 
     # pairwise epilogue + exact baseline: the batch entry's construction
     # verbatim (docs_kmv_source_overlap above) on the streamed sketch

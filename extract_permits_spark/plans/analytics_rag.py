@@ -2879,12 +2879,15 @@ def stream_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus batch conclusion (stream ≡ batch), on binary payloads.
     Same idempotent-sink contract as the text-side ingest rails."""
     import os
-    import shutil
-    import tempfile
 
-    from extract_permits_spark.streaming.phash_ingest import (
-        run_phash_ingest_available_now,
+    from extract_permits_spark.functions.multimodal import (
+        hamming_band_rows,
+        phash64,
     )
+    from extract_permits_spark.streaming.phash_ingest import (
+        score_batch_against_index,
+    )
+    from extract_permits_spark.streaming.util import run_file_ingest, stage_batches
 
     d = load_table(spark, sf_dir, "documents")
     media = mmfn.synthetic_phash_media(d)
@@ -2892,45 +2895,28 @@ def stream_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_media = media.where(F.col("media_id") % 2 == 1)
 
     work = scratch_dir("stream_phash_")
+    src, out = os.path.join(work, "in"), os.path.join(work, "out")
+    # two files -> two micro-batches
+    stage_batches(
+        [
+            new_media.where(((F.col("media_id") - 1) / 2).cast("long") % 2 == h)
+            for h in (0, 1)
+        ],
+        src,
+    )
+    # the static band index is built once, before the stream starts
+    static_bands = hamming_band_rows(phash64(static_media)).persist()
     try:
-        src = os.path.join(work, "in")
-        os.makedirs(src)
-        # two files -> two micro-batches under maxFilesPerTrigger=1
-        for part, cond in (("f0", 0), ("f1", 1)):
-            sub = os.path.join(src, part)
-            # repartition(1), NOT coalesce(1): coalesce collapses the
-            # whole post-spread encode stage into one task (measured
-            # 15.6 s vs 0.9 s on identical data — the r13 _spread_ids
-            # interaction); repartition keeps the encode parallel and
-            # shuffles only the 250 finished payloads to the one file.
-            new_media.where(
-                ((F.col("media_id") - 1) / 2).cast("long") % 2 == cond
-            ).repartition(1).write.parquet(sub)
-            for fn in os.listdir(sub):
-                if fn.endswith(".parquet"):
-                    shutil.move(
-                        os.path.join(sub, fn), os.path.join(src, f"{part}.parquet")
-                    )
-            shutil.rmtree(sub, ignore_errors=True)
-
-        out = os.path.join(work, "out")
-        q, static_bands = run_phash_ingest_available_now(
-            spark, src, static_media, os.path.join(work, "ckpt"), out_path=out
+        static_bands.count()
+        run_file_ingest(
+            spark, src, new_media.schema, os.path.join(work, "ckpt"), out,
+            score=lambda b: score_batch_against_index(b, static_bands),
         )
-        await_or_raise(q, 300)
-        static_bands.unpersist()
-        # Land the result in a managed table BEFORE the work dir goes
-        # away (same hygiene as the corpus ingest entries) — a lazy read
-        # over the temp dir would dangle after cleanup. Project off the
-        # idempotency partition key: the oracle is the batch contract,
-        # which has no notion of micro-batches.
-        tbl = f"stream_phash_out_{abs(hash(sf_dir)) % 10**8}"
-        spark.read.parquet(out).select("media_id", "is_neardup").write.mode(
-            "overwrite"
-        ).saveAsTable(tbl)
-        return spark.table(tbl)
     finally:
-        shutil.rmtree(work, ignore_errors=True)
+        static_bands.unpersist()
+    # project off the idempotency partition key: the oracle is the batch
+    # contract, which has no notion of micro-batches
+    return spark.read.parquet(out).select("media_id", "is_neardup")
 
 
 @register("emb_pca_top2", _ann_sql.pca_power2_sql(dim=64, iters=8))

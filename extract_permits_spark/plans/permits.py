@@ -170,13 +170,9 @@ def run_pipeline(
     permits_raw: DataFrame,
     universe: DataFrame,
     existing: DataFrame | None = None,
-    cache: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full §3.1 chain → (upload_df, review_df). ``cache=True`` persists
-    the validated parent so consuming both outputs costs one scan."""
+    """Full §3.1 chain → (upload_df, review_df)."""
     validated = validated_permits(permits_raw, universe, existing)
-    if cache:
-        validated = validated.persist()
     upload = validated.where(~F.col("has_error")).drop("has_error", "errors")
     review = validated.where(F.col("has_error"))
     return upload, review
@@ -192,10 +188,7 @@ def write_pipeline_partitioned(
     validated frame ONCE and write it partitioned by ``has_error`` —
     ``has_error=false/`` is the upload set, ``has_error=true/`` the review
     set. No persist, no second scan: the split is a partitioned write, so
-    the whole pipeline is a single pass end to end. (The persist-based
-    ``run_pipeline(cache=True)`` costs an extra full-frame serialization —
-    measured ~7s of the 17s total at sf0.1 — and is only needed when both
-    outputs must be consumed as in-memory DataFrames.) At cluster scale
+    the whole pipeline is a single pass end to end. At cluster scale
     this is also the shape that avoids keeping the wide frame pinned in
     executor memory between the two consumers."""
     validated = validated_permits(permits_raw, universe, existing)

@@ -1,8 +1,9 @@
 """SparkSession factory with scale-aware defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads in a
-single JVM), but every config here is chosen so the same code ships to a
-1000-executor cluster unchanged:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+process may run on, one thread each in a single JVM), but every config
+here is chosen so the same code ships to a 1000-executor cluster
+unchanged:
 
 - AQE on (runtime coalescing of small shuffle partitions, skew-join
   splitting) so a plan tuned at sf0.1 re-plans itself at 100 TB.
@@ -22,7 +23,10 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS`` if set, else the CPUs in this process's
+    affinity mask (not the host's core count: a container or taskset
+    may allow fewer)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "extract-permits-spark") -> SparkSession:

@@ -8,94 +8,33 @@ ingest time — the production contract for IVF-family indexes: quantizers
 are fit offline on a sample and only re-fit on drift, because re-fitting
 invalidates every previously written code. Each micro-batch therefore
 runs the same Arrow kernel as the batch build (one narrow map, no state,
-no shuffle of vectors), clusters its codes on cluster_id, and writes into
-the partition directories; queries see partition pruning over the union
-of everything ingested so far.
-
-Delivery semantics: foreachBatch alone is at-least-once — a failure
-between the data write and the checkpoint commit replays the batch. The
-write here is made IDEMPOTENT under that replay by scoping every row to
-its ``ingest_batch_id`` partition and using dynamic partition overwrite:
+no shuffle of vectors), clusters its codes on cluster_id, and is landed
+by the ingest rail (streaming/util.py) with ``partition_by=("cluster_id",)``:
 a replayed batch N rewrites exactly the (cluster_id=*, ingest_batch_id=N)
-leaf directories it produced the first time, so the recovered index never
-serves duplicate vec_ids. ``cluster_id`` stays the TOP-level partition
-key, so serving-side partition pruning is unchanged.
+leaf directories it produced the first time, so the recovered index
+never serves duplicate vec_ids, and ``cluster_id`` stays the TOP-level
+partition key, so serving-side partition pruning is unchanged.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-VEC_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
 
 
-def apply_index_batch(
-    bdf: DataFrame, batch_id: int, kern, index_path: str
-) -> None:
-    """Encode one micro-batch with the frozen quantizers and land it in
-    the index, idempotently: rows carry their ``ingest_batch_id`` as the
-    INNER partition key and the write is mode=overwrite with DYNAMIC
-    partition overwrite, so a foreachBatch replay (at-least-once delivery)
-    replaces its own leaf directories instead of appending duplicates.
-    Module-level (not a closure) so the replay contract is unit-testable
-    by calling it twice with the same batch_id."""
+def encode_batch(batch: DataFrame, kern) -> DataFrame:
+    """(vec_id, cluster_id, code_arr) for one micro-batch, encoded with
+    the frozen quantizers' kernel (``pq._assign_codes_arrow``)."""
     kern_col: Column = kern(F.col("embedding"))
-    (
-        bdf.select(F.col("vec_id"), kern_col.alias("_a"))
+    return (
+        batch.select(F.col("vec_id"), kern_col.alias("_a"))
         .select(
             "vec_id",
             F.col("_a.cluster_id").alias("cluster_id"),
             F.col("_a.code_arr").alias("code_arr"),
         )
-        .withColumn("ingest_batch_id", F.lit(int(batch_id)))
         # same small-files rule as the batch build: cluster the CODES so
         # each micro-batch adds one file per leaf directory, not one per
         # task x cluster
         .repartition(F.col("cluster_id"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cluster_id", "ingest_batch_id")
-        .parquet(index_path)
-    )
-
-
-def run_index_ingest_available_now(
-    spark: SparkSession,
-    src_dir: str,
-    book: list[list[list[float]]],
-    centroids: list[list[float]],
-    index_path: str,
-    checkpoint: str,
-):
-    """availableNow file-source run: encode every arriving vector with the
-    frozen quantizers and write (vec_id, code_arr) partitioned by
-    (cluster_id, ingest_batch_id) to ``index_path``. maxFilesPerTrigger=1
-    forces multiple micro-batches so the incremental path (not one
-    batch-like pass) is what executes; see apply_index_batch for the
-    replay-idempotency contract."""
-    from extract_permits_spark.functions.pq import _assign_codes_arrow
-
-    kern = _assign_codes_arrow(book, centroids)
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        apply_index_batch(bdf, batch_id, kern, index_path)
-
-    stream = (
-        spark.readStream.schema(VEC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -3,8 +3,8 @@ per micro-batch — the heavy-hitter monitor a crawl ingest keeps without
 a vocabulary-sized state store.
 
 Each micro-batch lands ITS OWN (row, bucket) count table (≤ d·w = 1024
-rows) partitioned by ``ingest_batch_id``; the corpus sketch is the SUM
-over landed batch sketches. The deliberate contrast with the HLL gate
+rows) through the ingest rail (streaming/util.py); the corpus sketch is
+the SUM over landed batch sketches. The deliberate contrast with the HLL gate
 (hll_ingest.py): sum-merge is associative and commutative but NOT
 idempotent — a replayed batch that simply appended would double-count —
 so here the idempotent dynamic-partition-overwrite sink is load-bearing
@@ -17,14 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
 
 
 def cm_bucket(i_col, word_col):
@@ -63,19 +55,6 @@ def batch_sketch(batch: DataFrame) -> DataFrame:
     )
 
 
-def apply_cm_batch(bdf: DataFrame, batch_id: int, out_path: str) -> None:
-    """Land one micro-batch's sketch idempotently — REQUIRED here: the
-    sum-merge would double-count an appended replay."""
-    (
-        batch_sketch(bdf)
-        .withColumn("ingest_batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id")
-        .parquet(out_path)
-    )
-
-
 def merged_sketch(spark: SparkSession, out_path: str) -> DataFrame:
     """The corpus sketch so far: element-wise sum of landed batch
     sketches."""
@@ -83,22 +62,4 @@ def merged_sketch(spark: SparkSession, out_path: str) -> DataFrame:
         spark.read.parquet(out_path)
         .groupBy("i", "bucket")
         .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
-def run_cm_ingest_available_now(
-    spark: SparkSession, src_dir: str, checkpoint: str, out_path: str
-):
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: apply_cm_batch(bdf, bid, out_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )

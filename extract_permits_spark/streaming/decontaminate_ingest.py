@@ -10,27 +10,14 @@ bit-consistent with what the nightly batch job would conclude. Each
 micro-batch explodes its own n-grams and probes the index with a
 broadcast join; per-document hit counts are batch-local (a document
 arrives whole in one file), so no streaming state is needed. At scale the
-eval index is benchmark-suite-sized — always broadcastable.
-
-Delivery semantics: foreachBatch is at-least-once, so the per-batch write
-is made IDEMPOTENT — the output path is partitioned by
-``ingest_batch_id`` and each batch lands via dynamic partition overwrite,
-so a replayed micro-batch replaces its own partition instead of appending
-duplicate (doc_id, n_hits, is_contaminated) rows.
+eval index is benchmark-suite-sized — always broadcastable. The ingest
+rail (streaming/util.py) lands each scored batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
 
 
 def _grams(df: DataFrame, n: int) -> DataFrame:
@@ -55,66 +42,3 @@ def score_batch_against_eval_grams(
         F.col("n_hits").cast("long").alias("n_hits"),
         "is_contaminated",
     )
-
-
-def apply_decontaminate_batch(
-    bdf: DataFrame,
-    batch_id: int,
-    eval_grams: DataFrame,
-    out_path: str,
-) -> None:
-    """Score one micro-batch and land it at ``out_path`` idempotently:
-    rows carry ``ingest_batch_id`` as the partition key and the write is
-    mode=overwrite with DYNAMIC partition overwrite, so a foreachBatch
-    REPLAY of an earlier batch_id replaces exactly its own partition
-    directory instead of appending duplicates. Path-based (not a managed
-    table) on purpose: a managed-table create that crashes between the
-    data write and the catalog commit strands the location
-    (LOCATION_ALREADY_EXISTS on replay); a path write has no such
-    two-phase hazard. Module-level so the replay contract is
-    unit-testable."""
-    (
-        score_batch_against_eval_grams(bdf, eval_grams)
-        .withColumn("ingest_batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id")
-        .parquet(out_path)
-    )
-
-
-def run_decontaminate_ingest_available_now(
-    spark: SparkSession,
-    src_dir: str,
-    eval_docs: DataFrame,
-    checkpoint: str,
-    out_path: str,
-):
-    """availableNow file-source run: flag every arriving training doc
-    against the static eval n-gram index, landing
-    (doc_id, n_hits, is_contaminated) idempotently at ``out_path`` (see
-    apply_decontaminate_batch). maxFilesPerTrigger=1 forces multiple
-    micro-batches so the per-batch path is what runs.
-
-    Returns ``(query, eval_grams)``: the caller owns the persisted eval
-    index and must ``eval_grams.unpersist()`` after
-    ``query.awaitTermination()`` — the stream reads it every micro-batch,
-    so it cannot be released here."""
-    eval_grams = _grams(eval_docs, 5).select("g").distinct().persist()
-    eval_grams.count()  # build the index once, before the stream starts
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        apply_decontaminate_batch(bdf, batch_id, eval_grams, out_path)
-
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, eval_grams

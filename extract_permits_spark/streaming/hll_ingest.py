@@ -3,8 +3,8 @@ maintained per micro-batch — the cardinality dashboard a crawl ingest
 keeps without ever re-scanning the corpus.
 
 Each micro-batch computes ITS OWN 256-register sketch (one bounded
-groupBy inside foreachBatch — no streaming state store) and lands it
-partitioned by ``ingest_batch_id``; the current corpus estimate is one
+groupBy — no streaming state store), landed by the ingest rail
+(streaming/util.py); the current corpus estimate is one
 ``groupBy(reg).max(r)`` over all landed batch partitions. Two structural
 properties make this the textbook streaming sketch:
 
@@ -12,8 +12,8 @@ properties make this the textbook streaming sketch:
   commutative, so the union of per-batch registers equals the registers
   of the full corpus — the registry entry's oracle is literally the
   batch HLL SQL (docs_hll_distinct's), value-for-value;
-- replay-idempotent TWICE over: the dynamic partition overwrite replaces
-  a replayed batch's own partition (the standard ingest-sink contract),
+- replay-idempotent TWICE over: the rail's dynamic partition overwrite
+  replaces a replayed batch's own partition,
   and even a hypothetical duplicate append could not corrupt the result
   because max is idempotent — re-observing a document cannot raise a
   register.
@@ -27,14 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
 
 
 def batch_registers(batch: DataFrame) -> DataFrame:
@@ -51,20 +43,6 @@ def batch_registers(batch: DataFrame) -> DataFrame:
     )
 
 
-def apply_hll_batch(bdf: DataFrame, batch_id: int, out_path: str) -> None:
-    """Land one micro-batch's registers idempotently (dynamic partition
-    overwrite on ingest_batch_id). Module-level for unit-testable replay,
-    like the other ingest sinks."""
-    (
-        batch_registers(bdf)
-        .withColumn("ingest_batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id")
-        .parquet(out_path)
-    )
-
-
 def merged_registers(spark: SparkSession, out_path: str) -> DataFrame:
     """The corpus sketch so far: max-merge every landed batch sketch and
     densify to all 256 registers (absent register = 0)."""
@@ -76,24 +54,4 @@ def merged_registers(spark: SparkSession, out_path: str) -> DataFrame:
     all_regs = spark.range(256).select(F.col("id").cast("int").alias("reg"))
     return all_regs.join(landed, "reg", "left").select(
         "reg", F.coalesce(F.col("r"), F.lit(0)).alias("m")
-    )
-
-
-def run_hll_ingest_available_now(
-    spark: SparkSession, src_dir: str, checkpoint: str, out_path: str
-):
-    """availableNow file-source run over (doc_id, text) parquet;
-    maxFilesPerTrigger=1 forces the incremental path."""
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: apply_hll_batch(bdf, bid, out_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -5,8 +5,8 @@ hll_ingest.py / cm_ingest.py; the third merge semantics of the sketch
 triptych).
 
 Each micro-batch computes ITS OWN per-source bottom-64 sketch (one
-WindowGroupLimit inside foreachBatch — no streaming state store) and
-lands it partitioned by ``ingest_batch_id``; the current corpus sketch
+WindowGroupLimit — no streaming state store), landed by the ingest rail
+(streaming/util.py); the current corpus sketch
 is the bottom-64 of the UNION of all landed rows. Two structural
 properties make this stream ≡ batch:
 
@@ -17,7 +17,7 @@ properties make this stream ≡ batch:
   k smallest of the corpus — the registry entry's oracle is literally
   the batch KMV SQL (docs_kmv_source_overlap's), value-for-value;
 - replay-idempotent twice over (the HLL class, not the CM class): the
-  dynamic partition overwrite replaces a replayed batch's partition,
+  rail's dynamic partition overwrite replaces a replayed batch's partition,
   and even a hypothetical duplicate append could not change the merged
   bottom-k (min-like — re-observing a hash cannot lower anything).
 
@@ -33,15 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
 
 K = 64
 
@@ -72,20 +64,6 @@ def batch_bottomk(batch: DataFrame, k: int = K) -> DataFrame:
     return _bottomk(sh.select("source", hv.alias("hv")).distinct(), k)
 
 
-def apply_kmv_batch(bdf: DataFrame, batch_id: int, out_path: str) -> None:
-    """Land one micro-batch's sketch idempotently (dynamic partition
-    overwrite on ingest_batch_id). Module-level for unit-testable
-    replay, like the other ingest sinks."""
-    (
-        batch_bottomk(bdf)
-        .withColumn("ingest_batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id")
-        .parquet(out_path)
-    )
-
-
 def merged_bottomk(spark: SparkSession, out_path: str, k: int = K) -> DataFrame:
     """The corpus sketch so far: bottom-k of the union of every landed
     batch sketch, as (source, mh sorted-array) — identical to the batch
@@ -95,24 +73,4 @@ def merged_bottomk(spark: SparkSession, out_path: str, k: int = K) -> DataFrame:
         _bottomk(landed, k)
         .groupBy("source")
         .agg(F.sort_array(F.collect_list("hv")).alias("mh"))
-    )
-
-
-def run_kmv_ingest_available_now(
-    spark: SparkSession, src_dir: str, checkpoint: str, out_path: str
-):
-    """availableNow file-source run over (doc_id, source, text) parquet;
-    maxFilesPerTrigger=1 forces the incremental path."""
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: apply_kmv_batch(bdf, bid, out_path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -8,31 +8,17 @@ The static index is built ONCE (batch, one shuffle) with the exact same
 md5 hash family as the batch dedup (`similarity.minhash_md5_bands`), so
 the streaming decision is bit-consistent with what the nightly batch
 job would conclude. Each micro-batch computes its own band signatures
-(a bounded batch-local aggregation inside foreachBatch — no streaming
-state) and probes the index with a semi join; at scale the index side
-is a bucketed/partitioned table and the probe is a co-located join.
-Docs too short to shingle (< n tokens) carry is_neardup = false.
-
-Delivery semantics: foreachBatch is at-least-once, so the per-batch
-write is made IDEMPOTENT — the output path is partitioned by
-``ingest_batch_id`` and each batch lands via dynamic partition
-overwrite, so a replayed micro-batch replaces its own partition instead
-of appending duplicate (doc_id, is_neardup) rows (same contract as the
-decontamination and ANN-index ingest sinks).
+(a bounded batch-local aggregation — no streaming state) and probes
+the index with a semi join; at scale the index side is a
+bucketed/partitioned table and the probe is a co-located join. Docs too
+short to shingle (< n tokens) carry is_neardup = false. The ingest rail
+(streaming/util.py) lands each scored batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
 
 
 def score_batch_against_index(
@@ -57,65 +43,3 @@ def score_batch_against_index(
             "doc_id", F.coalesce(F.col("_hit"), F.lit(False)).alias("is_neardup")
         )
     )
-
-
-def apply_neardup_batch(
-    bdf: DataFrame,
-    batch_id: int,
-    static_bands: DataFrame,
-    out_path: str,
-) -> None:
-    """Score one micro-batch against the static band index and land it at
-    ``out_path`` idempotently: rows carry ``ingest_batch_id`` as the
-    partition key and the write is mode=overwrite with DYNAMIC partition
-    overwrite, so a foreachBatch replay replaces exactly its own
-    partition. Path-based, not a managed table (a table create that
-    crashes before the catalog commit strands the location). Module-level
-    so the replay contract is unit-testable."""
-    (
-        score_batch_against_index(bdf, static_bands)
-        .withColumn("ingest_batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id")
-        .parquet(out_path)
-    )
-
-
-def run_neardup_ingest_available_now(
-    spark: SparkSession,
-    src_dir: str,
-    static_docs: DataFrame,
-    checkpoint: str,
-    out_path: str,
-):
-    """availableNow file-source run: score every arriving doc against the
-    static corpus index, landing (doc_id, is_neardup) idempotently at
-    ``out_path`` (see apply_neardup_batch). maxFilesPerTrigger=1 forces
-    multiple micro-batches so the per-batch scoring path (not a single
-    batch-like pass) is what executes.
-
-    Returns ``(query, static_bands)``: the caller owns the persisted
-    band index and must ``static_bands.unpersist()`` after
-    ``query.awaitTermination()`` — the stream probes it every
-    micro-batch, so it cannot be released here."""
-    from extract_permits_spark.functions.similarity import minhash_md5_bands
-
-    static_bands = minhash_md5_bands(static_docs).persist()
-    static_bands.count()  # build the index once, before the stream starts
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        apply_neardup_batch(bdf, batch_id, static_bands, out_path)
-
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, static_bands

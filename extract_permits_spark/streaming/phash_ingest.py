@@ -8,29 +8,18 @@ The static index is built ONCE (batch: decode -> phash64 ->
 hamming_band_rows, one narrow pass + one explode) with the exact hash
 the batch pair join uses, so the streaming decision is bit-consistent
 with what the nightly batch dedup would conclude. Each micro-batch
-decodes its own payloads inside foreachBatch, probes the index by the
-(band, value) equi-join, and VERIFIES candidates by full Hamming
-distance (band agreement alone is an 8-bit signal; the radius-7 verify
-is the actual contract — pigeonhole-complete, so no true pair is
-missed).
-
-Delivery semantics: foreachBatch is at-least-once, so the per-batch
-write is idempotent — partitioned by ``ingest_batch_id``, dynamic
-partition overwrite (same contract as the text/ANN/decon ingest sinks).
+decodes its own payloads, probes the index by the (band, value)
+equi-join, and VERIFIES candidates by full Hamming distance (band
+agreement alone is an 8-bit signal; the radius-7 verify is the actual
+contract — pigeonhole-complete, so no true pair is missed). The ingest
+rail (streaming/util.py) lands each scored batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-MEDIA_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
 
 _MAX_HAMMING = 7
 
@@ -73,59 +62,3 @@ def score_batch_against_index(
             F.coalesce(F.col("_hit"), F.lit(False)).alias("is_neardup"),
         )
     )
-
-
-def apply_phash_batch(
-    bdf: DataFrame,
-    batch_id: int,
-    static_bands: DataFrame,
-    out_path: str,
-) -> None:
-    """Score one micro-batch and land it idempotently (dynamic partition
-    overwrite on ``ingest_batch_id`` — a foreachBatch replay replaces
-    exactly its own partition). Module-level so the replay contract is
-    unit-testable, like apply_neardup_batch."""
-    (
-        score_batch_against_index(bdf, static_bands)
-        .withColumn("ingest_batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id")
-        .parquet(out_path)
-    )
-
-
-def run_phash_ingest_available_now(
-    spark: SparkSession,
-    src_dir: str,
-    static_media: DataFrame,
-    checkpoint: str,
-    out_path: str,
-):
-    """availableNow file-source run over (media_id, payload) parquet:
-    decode + hash + probe per micro-batch (maxFilesPerTrigger=1 forces
-    the incremental path). Returns ``(query, static_bands)``; the caller
-    must unpersist static_bands after awaitTermination."""
-    from extract_permits_spark.functions.multimodal import (
-        hamming_band_rows,
-        phash64,
-    )
-
-    static_bands = hamming_band_rows(phash64(static_media)).persist()
-    static_bands.count()  # build the index once, before the stream starts
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        apply_phash_batch(bdf, batch_id, static_bands, out_path)
-
-    stream = (
-        spark.readStream.schema(MEDIA_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, static_bands

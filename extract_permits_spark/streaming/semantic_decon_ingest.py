@@ -12,93 +12,25 @@ eval side is benchmark-suite-sized — its signature frame and Hamming
 ball are recomputed per batch here for bit-exact symmetry with the
 batch path; a production deployment would persist the exploded probe
 variants once (they are eval-sized × 137 — trivially broadcastable) and
-the plan shape would be unchanged.
-
-Delivery semantics: foreachBatch is at-least-once, so the per-batch
-write is made IDEMPOTENT — the output path is partitioned by
-``ingest_batch_id`` and each batch lands via dynamic partition
-overwrite, so a replayed micro-batch replaces its own partition instead
-of appending duplicate (vec_id, n_hits, is_contaminated) rows.
+the plan shape would be unchanged. The ingest rail (streaming/util.py)
+lands each scored batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-VEC_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("label", T.IntegerType()),
-    ]
-)
+from pyspark.sql import DataFrame
 
 
-def apply_semantic_decon_batch(
-    bdf: DataFrame,
-    batch_id: int,
-    eval_vecs: DataFrame,
-    out_path: str,
-    min_cosine: float,
-) -> None:
-    """Score one micro-batch of training vectors with the batch operator
-    (lsh_cross_hits — probe-side Hamming-ball bucket join, one cosine
-    fold per candidate) and land it at ``out_path`` idempotently via a
-    batch_id-scoped dynamic partition overwrite. Module-level so the
-    replay contract is unit-testable.
-
-    An EMPTY micro-batch returns without writing (writing nothing is
-    replay-safe): the availableNow file source used here always delivers
-    file-backed batches, but processing-time triggers can deliver empty
-    ones, and scoring an empty corpus frame has nothing to land. The
-    probe-side plane dimensionality is derived from ``eval_vecs`` inside
-    lsh_cross_hits, so the guard is belt-and-braces, not load-bearing."""
+def score_batch_against_eval(
+    batch: DataFrame, eval_vecs: DataFrame, min_cosine: float = 0.35
+) -> DataFrame:
+    """(vec_id, n_hits, is_contaminated) for one micro-batch of training
+    vectors: the batch operator (lsh_cross_hits — probe-side Hamming-ball
+    bucket join, one cosine fold per candidate). The plane
+    dimensionality is derived from ``eval_vecs``, so an empty batch
+    scores to an empty frame."""
     from extract_permits_spark.functions.similarity import lsh_cross_hits
 
-    if bdf.isEmpty():
-        return
-    (
-        lsh_cross_hits(
-            eval_vecs,
-            bdf.select("vec_id", "embedding"),
-            min_cosine=min_cosine,
-        )
-        .withColumn("ingest_batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch_id")
-        .parquet(out_path)
-    )
-
-
-def run_semantic_decon_ingest_available_now(
-    spark: SparkSession,
-    src_dir: str,
-    eval_vecs: DataFrame,
-    checkpoint: str,
-    out_path: str,
-    min_cosine: float = 0.35,
-):
-    """availableNow file-source run: flag every arriving training vector
-    against the static eval suite, landing (vec_id, n_hits,
-    is_contaminated) idempotently at ``out_path``. maxFilesPerTrigger=1
-    forces multiple micro-batches so the per-batch path is what runs."""
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        apply_semantic_decon_batch(
-            bdf, batch_id, eval_vecs, out_path, min_cosine
-        )
-
-    stream = (
-        spark.readStream.schema(VEC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return lsh_cross_hits(
+        eval_vecs, batch.select("vec_id", "embedding"), min_cosine=min_cosine
     )

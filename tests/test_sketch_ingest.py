@@ -10,13 +10,15 @@ pin behind the merge-semantics triptych the registry gates claim:
 The registry entries (stream_hll_distinct / stream_kmv_overlap /
 stream_cm_heavy_hitters) prove stream ≡ batch end-to-end against the
 batch SQL; these tests isolate the sink-level contract those gates rely
-on, without a streaming query in the loop (each apply_* is the exact
-foreachBatch body).
+on, without a streaming query in the loop (``land_batch(scorer(batch),
+batch_id, out)`` is the exact foreachBatch body of the ingest rail).
 """
 
 from __future__ import annotations
 
 import pytest
+
+from extract_permits_spark.streaming.util import land_batch
 
 
 def _docs(spark):
@@ -44,37 +46,37 @@ def halves(spark):
 
 def test_hll_ingest_replay_and_duplicate_append_are_noops(spark, halves, tmp_path):
     from extract_permits_spark.streaming.hll_ingest import (
-        apply_hll_batch,
+        batch_registers,
         merged_registers,
     )
 
     out = str(tmp_path / "hll")
-    apply_hll_batch(halves[0], 0, out)
-    apply_hll_batch(halves[1], 1, out)
+    land_batch(batch_registers(halves[0]), 0, out)
+    land_batch(batch_registers(halves[1]), 1, out)
     base = _snap(merged_registers(spark, out))
     # sink-level replay (same batch id): dynamic overwrite replaces
-    apply_hll_batch(halves[1], 1, out)
+    land_batch(batch_registers(halves[1]), 1, out)
     assert _snap(merged_registers(spark, out)) == base
     # duplicate APPEND (same data under a fresh batch id): max-merge
     # idempotence protects the estimate even without the sink contract
-    apply_hll_batch(halves[1], 2, out)
+    land_batch(batch_registers(halves[1]), 2, out)
     assert _snap(merged_registers(spark, out)) == base
 
 
 def test_kmv_ingest_replay_and_duplicate_append_are_noops(spark, halves, tmp_path):
     from extract_permits_spark.streaming.kmv_ingest import (
-        apply_kmv_batch,
+        batch_bottomk,
         merged_bottomk,
     )
 
     out = str(tmp_path / "kmv")
-    apply_kmv_batch(halves[0], 0, out)
-    apply_kmv_batch(halves[1], 1, out)
+    land_batch(batch_bottomk(halves[0]), 0, out)
+    land_batch(batch_bottomk(halves[1]), 1, out)
     base = _snap(merged_bottomk(spark, out))
-    apply_kmv_batch(halves[1], 1, out)
+    land_batch(batch_bottomk(halves[1]), 1, out)
     assert _snap(merged_bottomk(spark, out)) == base
     # bottom-k-of-union is min-like: re-observing hashes changes nothing
-    apply_kmv_batch(halves[1], 2, out)
+    land_batch(batch_bottomk(halves[1]), 2, out)
     assert _snap(merged_bottomk(spark, out)) == base
 
 
@@ -82,14 +84,13 @@ def test_kmv_merge_of_splits_equals_whole_corpus_sketch(spark, halves, tmp_path)
     """The stream ≡ batch argument itself: bottom-k of the union of
     per-batch bottom-k sets EQUALS the bottom-k of the full corpus."""
     from extract_permits_spark.streaming.kmv_ingest import (
-        apply_kmv_batch,
         batch_bottomk,
         merged_bottomk,
     )
 
     out = str(tmp_path / "kmv2")
-    apply_kmv_batch(halves[0], 0, out)
-    apply_kmv_batch(halves[1], 1, out)
+    land_batch(batch_bottomk(halves[0]), 0, out)
+    land_batch(batch_bottomk(halves[1]), 1, out)
     merged = _snap(merged_bottomk(spark, out))
     from pyspark.sql import functions as F
 
@@ -111,21 +112,21 @@ def test_cm_ingest_overwrite_protects_but_duplicate_append_corrupts(
     from pyspark.sql import functions as F
 
     from extract_permits_spark.streaming.cm_ingest import (
-        apply_cm_batch,
+        batch_sketch,
         merged_sketch,
     )
 
     out = str(tmp_path / "cm")
-    apply_cm_batch(halves[0], 0, out)
-    apply_cm_batch(halves[1], 1, out)
+    land_batch(batch_sketch(halves[0]), 0, out)
+    land_batch(batch_sketch(halves[1]), 1, out)
     base = _snap(merged_sketch(spark, out))
     base_total = sum(r[2] for r in base)
     # replay with the SAME id: partition replaced, sketch unchanged
-    apply_cm_batch(halves[1], 1, out)
+    land_batch(batch_sketch(halves[1]), 1, out)
     assert _snap(merged_sketch(spark, out)) == base
     # duplicate append under a NEW id: counts move — prove it, then
     # quantify it (half 1's contribution counted twice)
-    apply_cm_batch(halves[1], 2, out)
+    land_batch(batch_sketch(halves[1]), 2, out)
     corrupted = _snap(merged_sketch(spark, out))
     assert corrupted != base
     from extract_permits_spark.functions.similarity import tokens

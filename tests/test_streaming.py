@@ -461,21 +461,22 @@ def test_stream_ann_index_ingest_incremental_layout(spark, tmp_path):
         _pq_book_cached,
     )
     from extract_permits_spark.sources.readers import load_table
-    from extract_permits_spark.streaming.ann_index_ingest import (
-        run_index_ingest_available_now,
-    )
+    from extract_permits_spark.streaming.ann_index_ingest import encode_batch
+    from extract_permits_spark.streaming.util import run_file_ingest
 
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, sf, "embeddings")
     book = _pq_book_cached(spark, emb, sf)
     cents = _ivf_centroids_cached(spark, emb, sf)
+    kern = pqfn._assign_codes_arrow(book, cents)
     src = str(tmp_path / "in")
     emb.repartition(4).write.parquet(src)
     idx = str(tmp_path / "index")
-    q = run_index_ingest_available_now(
-        spark, src, book, cents, idx, str(tmp_path / "ckpt")
+    q = run_file_ingest(
+        spark, src, emb.schema, str(tmp_path / "ckpt"), idx,
+        score=lambda b: encode_batch(b, kern),
+        partition_by=("cluster_id",),
     )
-    q.awaitTermination(300)
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 2, f"expected multiple micro-batches, got {n_batches}"
     # cluster-partitioned directory layout (the partition-pruning contract)
@@ -486,7 +487,6 @@ def test_stream_ann_index_ingest_incremental_layout(spark, tmp_path):
         (r["vec_id"], int(r["cluster_id"]), tuple(r["code_arr"]))
         for r in spark.read.parquet(idx).collect()
     }
-    kern = pqfn._assign_codes_arrow(book, cents)
     want = {
         (r["vec_id"], int(r["_a"]["cluster_id"]), tuple(r["_a"]["code_arr"]))
         for r in emb.select("vec_id", kern(F.col("embedding")).alias("_a")).collect()
@@ -508,9 +508,8 @@ def test_ann_index_ingest_replay_is_idempotent(spark, tmp_path):
         _pq_book_cached,
     )
     from extract_permits_spark.sources.readers import load_table
-    from extract_permits_spark.streaming.ann_index_ingest import (
-        apply_index_batch,
-    )
+    from extract_permits_spark.streaming.ann_index_ingest import encode_batch
+    from extract_permits_spark.streaming.util import land_batch
 
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, sf, "embeddings")
@@ -521,8 +520,8 @@ def test_ann_index_ingest_replay_is_idempotent(spark, tmp_path):
 
     b0 = emb.where(F.col("vec_id") % 2 == 0)
     b1 = emb.where(F.col("vec_id") % 2 == 1)
-    apply_index_batch(b0, 0, kern, idx)
-    apply_index_batch(b1, 1, kern, idx)
+    land_batch(encode_batch(b0, kern), 0, idx, ("cluster_id",))
+    land_batch(encode_batch(b1, kern), 1, idx, ("cluster_id",))
     before = sorted(
         (r["vec_id"], int(r["cluster_id"]), tuple(r["code_arr"]))
         for r in spark.read.parquet(idx).collect()
@@ -531,7 +530,7 @@ def test_ann_index_ingest_replay_is_idempotent(spark, tmp_path):
     assert len({v for v, _, _ in before}) == len(before)  # unique vec_ids
 
     # the replay: batch 0 arrives again with the same batch_id
-    apply_index_batch(b0, 0, kern, idx)
+    land_batch(encode_batch(b0, kern), 0, idx, ("cluster_id",))
     after = sorted(
         (r["vec_id"], int(r["cluster_id"]), tuple(r["code_arr"]))
         for r in spark.read.parquet(idx).collect()
@@ -546,8 +545,9 @@ def test_decontaminate_ingest_replay_is_idempotent(spark, tmp_path):
     (doc_id, n_hits, is_contaminated) rows (r9 advice)."""
     from extract_permits_spark.streaming.decontaminate_ingest import (
         _grams,
-        apply_decontaminate_batch,
+        score_batch_against_eval_grams as score,
     )
+    from extract_permits_spark.streaming.util import land_batch
 
     eval_docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta")],
@@ -563,8 +563,8 @@ def test_decontaminate_ingest_replay_is_idempotent(spark, tmp_path):
     )
     ev = _grams(eval_docs, 5).select("g").distinct()
     out = str(tmp_path / "out")
-    apply_decontaminate_batch(b0, 0, ev, out)
-    apply_decontaminate_batch(b1, 1, ev, out)
+    land_batch(score(b0, ev), 0, out)
+    land_batch(score(b1, ev), 1, out)
     before = sorted(
         (r["doc_id"], r["n_hits"], r["is_contaminated"])
         for r in spark.read.parquet(out).collect()
@@ -572,7 +572,7 @@ def test_decontaminate_ingest_replay_is_idempotent(spark, tmp_path):
     assert before == [(100, 2, True), (101, 0, False)]
 
     # the replay: batch 0 arrives again with the same batch_id
-    apply_decontaminate_batch(b0, 0, ev, out)
+    land_batch(score(b0, ev), 0, out)
     after = sorted(
         (r["doc_id"], r["n_hits"], r["is_contaminated"])
         for r in spark.read.parquet(out).collect()
@@ -589,8 +589,9 @@ def test_semantic_decon_ingest_replay_is_idempotent(spark, tmp_path):
 
     from extract_permits_spark.sources.readers import load_table
     from extract_permits_spark.streaming.semantic_decon_ingest import (
-        apply_semantic_decon_batch,
+        score_batch_against_eval as score,
     )
+    from extract_permits_spark.streaming.util import land_batch
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(40)
     rows = emb.collect()
@@ -610,8 +611,8 @@ def test_semantic_decon_ingest_replay_is_idempotent(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     out = str(tmp_path / "out")
-    apply_semantic_decon_batch(b0, 0, ev, out, min_cosine=0.99)
-    apply_semantic_decon_batch(b1, 1, ev, out, min_cosine=0.99)
+    land_batch(score(b0, ev, min_cosine=0.99), 0, out)
+    land_batch(score(b1, ev, min_cosine=0.99), 1, out)
     before = sorted(
         (r["vec_id"], r["n_hits"], r["is_contaminated"])
         for r in spark.read.parquet(out).collect()
@@ -622,7 +623,7 @@ def test_semantic_decon_ingest_replay_is_idempotent(spark, tmp_path):
     assert sum(1 for n, c in got.values() if c) == 1  # only the leak
 
     # the replay: batch 0 arrives again with the same batch_id
-    apply_semantic_decon_batch(b0, 0, ev, out, min_cosine=0.99)
+    land_batch(score(b0, ev, min_cosine=0.99), 0, out)
     after = sorted(
         (r["vec_id"], r["n_hits"], r["is_contaminated"])
         for r in spark.read.parquet(out).collect()
@@ -633,7 +634,7 @@ def test_semantic_decon_ingest_replay_is_idempotent(spark, tmp_path):
     # availableNow file batches never do) is a no-op: nothing written,
     # nothing disturbed, no crash in the dim probe (r10 ADVICE)
     empty = b0.where(F.col("vec_id") < 0)
-    apply_semantic_decon_batch(empty, 2, ev, out, min_cosine=0.99)
+    land_batch(score(empty, ev, min_cosine=0.99), 2, out)
     final = sorted(
         (r["vec_id"], r["n_hits"], r["is_contaminated"])
         for r in spark.read.parquet(out).collect()
@@ -647,8 +648,9 @@ def test_neardup_ingest_replay_is_idempotent(spark, tmp_path):
     instead of appending duplicate (doc_id, is_neardup) rows."""
     from extract_permits_spark.functions.similarity import minhash_md5_bands
     from extract_permits_spark.streaming.neardup_ingest import (
-        apply_neardup_batch,
+        score_batch_against_index as score,
     )
+    from extract_permits_spark.streaming.util import land_batch
 
     static = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog")],
@@ -664,8 +666,8 @@ def test_neardup_ingest_replay_is_idempotent(spark, tmp_path):
     )
     idx = minhash_md5_bands(static)
     out = str(tmp_path / "out")
-    apply_neardup_batch(b0, 0, idx, out)
-    apply_neardup_batch(b1, 1, idx, out)
+    land_batch(score(b0, idx), 0, out)
+    land_batch(score(b1, idx), 1, out)
     before = sorted(
         (r["doc_id"], r["is_neardup"])
         for r in spark.read.parquet(out).collect()
@@ -673,7 +675,7 @@ def test_neardup_ingest_replay_is_idempotent(spark, tmp_path):
     assert before == [(100, True), (101, False)]
 
     # the replay: batch 0 arrives again with the same batch_id
-    apply_neardup_batch(b0, 0, idx, out)
+    land_batch(score(b0, idx), 0, out)
     after = sorted(
         (r["doc_id"], r["is_neardup"])
         for r in spark.read.parquet(out).collect()
@@ -806,9 +808,9 @@ def test_cdc_apply_swap_crash_windows_recover(spark, tmp_path):
 
 
 def test_phash_ingest_batch_replay_is_idempotent(spark, tmp_path):
-    """apply_phash_batch replayed with the same batch_id must replace its
-    own partition, not append — the at-least-once contract every ingest
-    sink in this engine pins."""
+    """The phash scorer landed twice with the same batch_id must replace
+    its own partition, not append — the at-least-once contract every
+    ingest sink in this engine pins."""
     from pyspark.sql import functions as F
 
     from extract_permits_spark.functions.multimodal import (
@@ -817,7 +819,10 @@ def test_phash_ingest_batch_replay_is_idempotent(spark, tmp_path):
         synthetic_phash_media,
     )
     from extract_permits_spark.sources.readers import load_table
-    from extract_permits_spark.streaming.phash_ingest import apply_phash_batch
+    from extract_permits_spark.streaming.phash_ingest import (
+        score_batch_against_index as score,
+    )
+    from extract_permits_spark.streaming.util import land_batch
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").where(
         F.col("doc_id") < 30
@@ -828,11 +833,11 @@ def test_phash_ingest_batch_replay_is_idempotent(spark, tmp_path):
     ).persist()
     batch = media.where(F.col("media_id") % 2 == 1)
     out = str(tmp_path / "out")
-    apply_phash_batch(batch, 3, static_bands, out)
+    land_batch(score(batch, static_bands), 3, out)
     first = sorted(
         tuple(r) for r in spark.read.parquet(out).collect()
     )
-    apply_phash_batch(batch, 3, static_bands, out)  # replay
+    land_batch(score(batch, static_bands), 3, out)  # replay
     second = sorted(
         tuple(r) for r in spark.read.parquet(out).collect()
     )
@@ -842,3 +847,66 @@ def test_phash_ingest_batch_replay_is_idempotent(spark, tmp_path):
     flagged = {r["media_id"] for r in spark.read.parquet(out).collect()
                if r["is_neardup"]}
     assert {m for m in range(30) if m % 4 == 1} <= flagged
+
+
+def test_ingest_rail_lands_each_batch_once_and_replays_are_noops(spark, tmp_path):
+    """The shared ingest rail (streaming/util.py) end to end: three staged
+    files drain as three micro-batches, each landed exactly once under
+    the (cluster_id=, ingest_batch_id=) layout; landing a batch again
+    under its own id (the at-least-once replay) and landing an EMPTY
+    scored batch both leave the output unchanged."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from extract_permits_spark.streaming.util import (
+        land_batch,
+        run_file_ingest,
+        stage_batches,
+    )
+
+    rows = spark.createDataFrame(
+        [(i, i % 3) for i in range(30)], "k long, cluster_id int"
+    )
+    frames = [rows.where(F.col("k") % 3 == i) for i in range(3)]
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    stage_batches(frames, src)
+    assert sorted(os.listdir(src)) == ["f0.parquet", "f1.parquet", "f2.parquet"]
+
+    def score(b):
+        return b.select("k", "cluster_id", (F.col("k") * 10).alias("v"))
+
+    q = run_file_ingest(
+        spark, src, rows.schema, str(tmp_path / "ckpt"), out, score,
+        partition_by=("cluster_id",),
+    )
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
+
+    def snap():
+        return sorted(
+            (r["k"], r["cluster_id"], r["v"], r["ingest_batch_id"])
+            for r in spark.read.parquet(out).collect()
+        )
+
+    landed = snap()
+    # every row exactly once, one batch id per staged file
+    assert sorted(k for k, *_ in landed) == list(range(30))
+    assert len({b for *_, b in landed}) == 3
+    assert all(v == 10 * k for k, _, v, _ in landed)
+    # partition_by nests ingest_batch_id under the caller's key
+    clusters = sorted(d for d in os.listdir(out) if not d.startswith("_"))
+    assert clusters == ["cluster_id=0", "cluster_id=1", "cluster_id=2"]
+    for c in clusters:
+        leaves = os.listdir(os.path.join(out, c))
+        assert leaves and all(d.startswith("ingest_batch_id=") for d in leaves)
+
+    # replay: the file that landed as batch b arrives again under id b
+    b = next(b for k, _, _, b in landed if k == 0)
+    land_batch(score(frames[0]), b, out, ("cluster_id",))
+    assert snap() == landed
+    # an empty scored batch writes no partition and disturbs none
+    land_batch(score(frames[0].where(F.col("k") < 0)), 7, out, ("cluster_id",))
+    assert snap() == landed
+    assert not any(
+        "ingest_batch_id=7" in d for _, ds, _ in os.walk(out) for d in ds
+    )
