@@ -23,18 +23,43 @@ round budget is capped + asserted so a chain can't run away silently.
 Scale notes (100 TB lens):
 - The edge list is tiny relative to the corpus (near-dup pairs), so the
   iteration cost is bounded by duplicate density, not corpus size.
-- ``localCheckpoint`` every few rounds truncates the lineage chain —
+- ``localCheckpoint`` every round truncates the lineage chain —
   without it the plan doubles per iteration and the driver's optimizer
   time dominates (a real failure mode for iterative DataFrame jobs).
 - Convergence needs one tiny action per round (a count of changed
   labels). That is the standard driver-coordinated loop (GraphX does
   the same); the per-round action reads one aggregated Long, not data.
+
+Job shape: the symmetric edge list is planned from ONE copy of the edge
+frame (usually a lazy near-dup pair join) and checkpointed once, with a
+single shuffle; the seed labels are computed inside round 1's action;
+each round is one checkpoint action whose Observation carries the
+changed-label count. A graph that converges in one round therefore runs
+two actions: the edge checkpoint and round 1 (tests/test_graph.py pins
+the resulting Spark job count).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def symmetric_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both orientations of every edge as ``(u, v)`` rows (duplicates
+    kept; the caller dedups).
+
+    Each edge row is exploded into its two orientations, so the edge
+    plan appears ONCE; a ``union`` of two projections of a lazy edge
+    frame would plan (and run) the whole pair-detection subtree twice."""
+    return edges.select(
+        F.inline(
+            F.array(
+                F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
+                F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
+            )
+        )
+    )
 
 
 def connected_components(
@@ -61,26 +86,19 @@ def connected_components(
     Raises if the fixpoint is not reached within ``max_rounds`` (2^25
     effective hops — unreachable for any real pair graph).
     """
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        # static across rounds: checkpoint once, pre-partitioned on the
-        # probe key so each round's join only shuffles the labels side
-        .repartition(F.col("v"))
-        .localCheckpoint(eager=True)
-    )
+    # static across rounds: checkpoint once. No pre-partitioning on the
+    # probe key: the checkpoint does not keep it under AQE (its scan
+    # reports UnknownPartitioning), so every round's join re-shuffles
+    # ``sym`` whatever shuffle built it; the distinct's is the only one.
+    sym = symmetric_edges(edges, src, dst).distinct().localCheckpoint(eager=True)
     # seed with the first propagation hop folded in: label(u) = min(u,
     # min neighbor) — one groupBy instead of a distinct + a full round
-    # (shallow LSH-bucket cliques then converge in 1-2 checked rounds)
-    labels = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("_nm"))
-        .select(
-            F.col("u").alias("id"),
-            F.least(F.col("u"), F.col("_nm")).alias("component"),
-        )
-        .localCheckpoint(eager=True)
+    # (shallow LSH-bucket cliques then converge in 1-2 checked rounds).
+    # Left LAZY: round 1's checkpoint job computes it from ``sym``, so
+    # the seed costs no job of its own.
+    labels = sym.groupBy("u").agg(F.min("v").alias("_nm")).select(
+        F.col("u").alias("id"),
+        F.least(F.col("u"), F.col("_nm")).alias("component"),
     )
 
     # Stale-round checkpoint blocks are freed EXPLICITLY: clearCache()

@@ -40,58 +40,32 @@ from extract_permits_spark.sources.readers import load_table  # noqa: F401
 # round; _CHECK_FIRST controls that window and is rotated each round so
 # every entry earns a driver row (see the r9 NOTE below the list).
 _CHECK_FIRST = [
-    # r16 window: (a) the ENTIRE 28-entry r10-witness cohort leads —
-    # at age 5 the bound (tests/test_witness_age.py) forces every one
-    # of them in, exactly as the r15 NOTE predicted; (b) the entries
-    # this round's edits changed (rotation_audit output against
-    # _AUDIT_BASE, pinned by tests/test_rotation.py); (c) the oldest
-    # r11-witnessed entries (ledger order), filling the window to
-    # exactly 50. Witness ages are computed, not hand-tallied:
-    # python tools/witness_ledger.py.
-    # (a) the r10 cohort — oldest witnesses in the registry, all 28
-    "docs_url_dedup",
-    "emb_pq_adc_topk",
-    "emb_pq_codes",
-    "emb_quantize",
-    "ev_hopping_agg",
-    "ev_rollup",
-    "ev_session_window",
-    "j11_salted_skew_join",
-    "j7_asof_join",
-    "j8_range_join",
-    "jsonl_corrupt_quarantine",
-    "pack_sequences",
-    "sample_hash_split",
-    "sample_interleave",
-    "sample_mixture_weights",
-    "sample_stratified",
-    "sketch_approx_quantiles",
-    "sketch_hll_region_distinct",
-    "sketch_topk_tokens",
-    "stream_ann_index_ingest",
-    "stream_session_agg",
+    # Window after r16: the r10 cohort that led the r16 window was
+    # witnessed green in CORRECTNESS_r16 and leaves it. (a) every entry
+    # changed since _AUDIT_BASE (rotation_audit output, pinned by
+    # tests/test_rotation.py); (b) the oldest r11-witnessed entries
+    # (ledger order), filling the window to exactly 50. Witness ages
+    # are computed, not hand-tallied: python tools/witness_ledger.py.
+    # (a) operators/graph.py — connected_components explodes both edge
+    # orientations from one copy of the edge plan and folds the seed
+    # hop into round 1's job (same labels; every CC consumer):
+    "dedup_cluster_components",
+    "dedup_cluster_canonical",
+    "llm_corpus_curation",
+    "sample_leakage_safe_split",
+    "docs_corpus_report",
+    "emb_neardup_components",
+    "mm_image_dedup_clusters",
+    # memory-sink query names built from a stable md5 tag of the fixture
+    # dir instead of the per-process salted hash():
+    "stream_tumbling_agg",
     "stream_stateful_totals",
-    "text_clean_mask",
-    "text_repetition",
-    "u3_intersect",
-    "vocab_bpe_pairs",
-    "w5_rolling",
-    "x4_pivot",
-    # (b) changed this round (r16 optimization edits), per the
-    # transitive body-granular audit (tools/rotation_audit.py vs
-    # _AUDIT_BASE, pinned by tests/test_rotation.py):
-    # functions/similarity.py — the minhash dup-mass gate now shares
-    # its md5-groupBy pass with the collapsed branch (_dup_groups /
-    # _dup_gate_from_groups), the single-reference pre-aggregation
-    # shingle-stream checkpoints were dropped (the verifier reads
-    # explode(_shingles) from the checkpointed sh), and
-    # lsh_bands/_hamming_ball_explode backtick-quote interpolated
-    # names (ADVICE r15 — tree-identical for every internal caller);
-    # session.py — dataFrameDebugging became env-overridable
-    # (ADVICE r15; default unchanged); simhash_table's vote aggregate
-    # became the bit-packed two-lane form (same integer votes —
-    # 2·ones_i > n ⟺ Σ±1 > 0 — pinned by tests + oracle).
-    # Consumers flagged:
+    "stream_dedup",
+    "stream_session_agg",
+    "stream_stream_join",
+    "stream_corpus_ingest",
+    # r16 optimization edits (functions/similarity.py minhash/simhash
+    # passes; rag_context_assembly's dropped shortlist checkpoint):
     "dedup_simhash",
     "dedup_simhash_recall",
     "dedup_minhash_lsh",
@@ -100,31 +74,39 @@ _CHECK_FIRST = [
     "stream_neardup_ingest",
     "docs_source_overlap_matrix",
     "emb_cross_decontaminate",
-    "emb_neardup_components",
     "emb_neardup_lsh",
     "stream_decontaminate_ingest",
     "stream_semantic_decon_ingest",
-    # plans/analytics_rag.py — rag_context_assembly dropped its stale
-    # single-consumer shortlist checkpoint (r16; values oracle-matched
-    # at sf0.001+sf0.01)
     "rag_context_assembly",
-    # the micro-batch ingest rail (streaming/util.py) replaced the
-    # per-module landing of every stream gate and sketch, and their
-    # results land in scratch dirs instead of managed tables; the rail
-    # entries not already queued above, plus emb_ivfpq_indexed_topk
-    # (same managed-table fix):
+    # the micro-batch ingest rail (streaming/util.py) and the
+    # scratch-dir landing of managed-table results:
+    "stream_ann_index_ingest",
     "stream_hll_distinct",
     "stream_cm_heavy_hitters",
     "stream_kmv_overlap",
     "stream_phash_ingest",
     "emb_ivfpq_indexed_topk",
-    # (c) the oldest r11-witnessed entries (ledger order), filling to
-    # exactly 50; the rest of the r11 cohort defers to the next window
-    # where the age bound will force it.
-    "a10_regression",
-    "a11_histogram",
-    "a9_mode",
-    "dedup_winnowing",
+    # (b) the oldest r11-witnessed entries (ledger order); the rest of
+    # the r11 cohort defers to the next window.
+    "ev_retention",
+    "ev_cube",
+    "q6_forecast_revenue",
+    "q10_returned_items",
+    "w6_rank_family",
+    "ev_transitions",
+    "x5_scd2_intervals",
+    "j9_fuzzy_symspell",
+    "ev_time_weighted_avg",
+    "x6_merge_upsert",
+    "j10_null_safe_join",
+    "stream_cdc_apply",
+    "ev_variant_agg",
+    "sketch_cms_topk",
+    "x7_date_spine",
+    "profile_documents",
+    "graph_triangles",
+    "j7b_asof_forward",
+    "q1_incremental_maintenance",
 ]
 
 # Base ref for this round's rotation audit (r13 final commit) and the
@@ -140,8 +122,10 @@ _CHECK_FIRST = [
 _AUDIT_BASE = "c7b7cc989caf530d978f3cda8a01a0a2d96e9a22"
 _AUDIT_HYGIENE_MODULES: set[str] = {
     # default_parallelism() falls back to the CPU affinity mask instead
-    # of a fixed 32 when $SPARK_GRAFT_CPUS is unset; only get_spark()
-    # reads it, and no registry entry builds its own session
+    # of a fixed 32 when $SPARK_GRAFT_CPUS is unset, the driver heap
+    # default is sized to the machine, and the codegen class cache holds
+    # 1000 entries: only get_spark() reads these, none moves a value,
+    # and no registry entry builds its own session
     "extract_permits_spark.session",
     # run_pipeline lost its never-passed ``cache=False`` parameter: the
     # code path every caller runs is unchanged
@@ -150,8 +134,13 @@ _AUDIT_HYGIENE_MODULES: set[str] = {
     # stream entries use) changed docstrings only; the new rail
     # functions are reached only by the rail entries, which stay
     # flagged through their own changed chunk bodies and *_ingest
-    # modules
+    # modules, and the new stable_tag only by the memory-sink entries,
+    # flagged through their own changed bodies
     "extract_permits_spark.streaming.util",
+    # the module docstring and the TABLES comment now say the readers
+    # infer the schema from the parquet footers (they always did); no
+    # code changed
+    "extract_permits_spark.sources.readers",
 }
 
 # r16 rotation NOTE: witness-age arithmetic is computed, not
@@ -159,9 +148,9 @@ _AUDIT_HYGIENE_MODULES: set[str] = {
 # per-entry last-green-round table, and see tests/test_witness_age.py
 # for the enforced bound: every entry whose witness would age past 5
 # rounds at the upcoming driver round must sit in this window.
-# Deferred to r17: the r11 cohort past the 22 (c) slots above (ledger
-# order from q15_top_supplier) — at age 5 next round the bound will
-# force them into the r17 window.
+# Deferred: the 12 r11-witnessed entries past the 19 (b) slots above
+# (ledger order from ev_dau_wau); the changed entries leave no room for
+# them in this window.
 # The rotation rule is TRANSITIVE over helper imports and BODY-GRANULAR
 # within chunk modules: tools/rotation_audit.py <git-ref> lists every
 # registry entry whose own function body, same-chunk helper, or

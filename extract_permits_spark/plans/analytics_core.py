@@ -1533,15 +1533,15 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL oracle as the batch path — streaming and batch must agree."""
     import os
     import shutil
-    import tempfile
 
     from extract_permits_spark.streaming.events import run_available_now
+    from extract_permits_spark.streaming.util import stable_tag
 
     work = scratch_dir("ev_stream_")
     src = os.path.join(work, "in")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"), src)
-    name = f"ev_stream_q_{abs(hash(sf_dir)) % 10**8}"
+    name = f"ev_stream_q_{stable_tag(sf_dir)}"
     q = run_available_now(spark, src, os.path.join(work, "ckpt"), table_name=name)
     await_or_raise(q, 300)
     return spark.sql(f"SELECT * FROM {name}")
@@ -1566,15 +1566,15 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous mode."""
     import os
     import shutil
-    import tempfile
 
     from extract_permits_spark.streaming.stateful import run_available_now
+    from extract_permits_spark.streaming.util import stable_tag
 
     work = scratch_dir("ev_stream_stateful_")
     src = os.path.join(work, "in")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"), src)
-    name = f"ev_stream_stateful_{abs(hash(sf_dir)) % 10**8}"
+    name = f"ev_stream_stateful_{stable_tag(sf_dir)}"
     q = run_available_now(spark, src, os.path.join(work, "ckpt"), name)
     await_or_raise(q, 300)
     return spark.sql(f"SELECT * FROM {name}")
@@ -1669,16 +1669,16 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id) per type — which is exactly the oracle."""
     import os
     import shutil
-    import tempfile
 
     from extract_permits_spark.streaming.events import run_dedup_available_now
+    from extract_permits_spark.streaming.util import stable_tag
 
     work = scratch_dir("ev_stream_dedup_")
     src = os.path.join(work, "in")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(src, "a.parquet"))
     shutil.copy(os.path.join(sf_dir, "events.parquet"), os.path.join(src, "b.parquet"))
-    name = f"ev_stream_dedup_{abs(hash(sf_dir)) % 10**8}"
+    name = f"ev_stream_dedup_{stable_tag(sf_dir)}"
     q = run_dedup_available_now(
         spark, src, os.path.join(work, "ckpt"), table_name=name
     )

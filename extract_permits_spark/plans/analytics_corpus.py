@@ -840,15 +840,15 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark at steady state."""
     import os
     import shutil
-    import tempfile
 
     from extract_permits_spark.streaming.events import run_sessions_available_now
+    from extract_permits_spark.streaming.util import stable_tag
 
     work = scratch_dir("ev_stream_sessions_")
     src = os.path.join(work, "in")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"), src)
-    name = f"ev_stream_sessions_{abs(hash(sf_dir)) % 10**8}"
+    name = f"ev_stream_sessions_{stable_tag(sf_dir)}"
     q = run_sessions_available_now(spark, src, os.path.join(work, "ckpt"), table_name=name)
     await_or_raise(q, 300)
     return spark.sql(f"SELECT * FROM {name}")

@@ -414,15 +414,15 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams forever."""
     import os
     import shutil
-    import tempfile
 
     from extract_permits_spark.streaming.events import run_interval_join_available_now
+    from extract_permits_spark.streaming.util import stable_tag
 
     work = scratch_dir("ev_stream_ssj_")
     src = os.path.join(work, "in")
     os.makedirs(src)
     shutil.copy(os.path.join(sf_dir, "events.parquet"), src)
-    name = f"ev_stream_ssj_{abs(hash(sf_dir)) % 10**8}"
+    name = f"ev_stream_ssj_{stable_tag(sf_dir)}"
     # a stream-stream join holds TWO keyed state stores per shuffle
     # partition; at local-test scale 32 partitions is pure state-store
     # setup overhead (23s → ~8s at 8). Production sizing follows state

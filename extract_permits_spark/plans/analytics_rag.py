@@ -2003,7 +2003,6 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarantine table in tests/test_streaming.py."""
     import os
     import shutil
-    import tempfile
 
     from pyspark.sql import types as T
 
@@ -2011,6 +2010,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from extract_permits_spark.streaming.corpus_ingest import (
         run_ingest_available_now,
     )
+    from extract_permits_spark.streaming.util import stable_tag
 
     schema = T.StructType(
         [
@@ -2030,7 +2030,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_jsonl_corpus(d.repartition(4), src, compression=None)
         with open(os.path.join(src, "poison.json"), "w") as f:
             f.write("this is not json\nnull\n{\"doc_id\": \"not a long\"\n")
-        tag = abs(hash(sf_dir)) % 10**8
+        tag = stable_tag(sf_dir)
         clean_t, bad_t = f"corpus_clean_{tag}", f"corpus_bad_{tag}"
         qc, qb = run_ingest_available_now(
             spark, src, os.path.join(work, "ckpt"), schema, clean_t, bad_t

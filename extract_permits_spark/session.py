@@ -29,6 +29,44 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+# Where the memory ceiling of this process's container can be read: the
+# cgroup v2 limit ("max" when unlimited) and the cgroup v1 limit (a huge
+# number when unlimited). Both are relative to the cgroup namespace root.
+CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def machine_memory_bytes(
+    cgroup_limits=CGROUP_MEMORY_LIMITS, meminfo: str = "/proc/meminfo"
+) -> int:
+    """The memory this process can actually get: the smaller of the
+    cgroup memory limit (when one is set) and the host's ``MemTotal``."""
+    sizes = []
+    for path in cgroup_limits:
+        try:
+            with open(path) as f:
+                text = f.read().strip()
+        except OSError:
+            continue
+        if text.isdigit():
+            sizes.append(int(text))
+    with open(meminfo) as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                sizes.append(int(line.split()[1]) * 1024)
+                break
+    return min(sizes)
+
+
+def default_driver_memory(machine_bytes: int) -> str:
+    """Heap for the local-mode driver JVM: three quarters of the
+    machine's memory in whole GiB (at least 1g). The rest is left to the
+    Python workers, the JVM's off-heap memory and the page cache."""
+    return f"{max(1, machine_bytes * 3 // 4 >> 30)}g"
+
+
 def get_spark(app_name: str = "extract-permits-spark") -> SparkSession:
     cpus = default_parallelism()
     return (
@@ -79,13 +117,27 @@ def get_spark(app_name: str = "extract-permits-spark") -> SparkSession:
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # Generated-class cache: one corpus_curation run generates ~110-120
+        # distinct classes, more than Spark's default 100 entries, so LRU
+        # evicted each class before the next run could reuse it and every
+        # warm run recompiled 82-83 classes in Janino (CodegenMetrics,
+        # 4-vCPU host); permit_batch generates 65. 1000 holds a run of
+        # either workload, so warm runs reuse their classes. A cached
+        # class costs a few KB of driver heap.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # local-mode: ALL task threads share the driver JVM heap, so this
-        # is the de-facto executor memory. 8g on this 125 GB box caused GC
-        # storms on the heavy dedup jobs — measured 20s -> 45s -> (after
-        # full GC) 12.5s for the SAME amplified minhash query; 48g holds
-        # the working set. On a real cluster executors size independently
+        # is the de-facto executor memory. The default is sized to the
+        # machine (cgroup limit or MemTotal, see default_driver_memory):
+        # a heap the machine cannot back gets the JVM OOM-killed where
+        # Spark would have spilled. The old fixed 48g was tuned on a
+        # 125 GB box (8g there caused GC storms on the heavy dedup jobs).
+        # On a real cluster executors size independently
         # (spark.executor.memory) and this only governs the driver.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_memory(machine_memory_bytes()),
+        )
         .getOrCreate()
     )
 

@@ -1,15 +1,17 @@
-"""Parquet readers with explicit schemas (SURVEY.md §1.3).
+"""Parquet readers (SURVEY.md §1.3).
 
 The reference ingests schemaless JSON/Excel and fixes the schema
 declaratively downstream (reference: chicago/permit_cleaning.py:553,
-643-665). We invert that: readers carry explicit schemas so every plan is
-deterministic and the parquet scan gets full column pruning + predicate
-pushdown from Catalyst.
+643-665). Here the schema comes from the parquet files themselves:
+``load_table`` reads each table with ``spark.read.parquet``, which
+infers the schema from the file footers in one Spark job per call (a
+``llm_corpus_curation`` run makes 3 such calls). ``TABLES`` lists the
+known tables' columns; it does not type them. Every plan still gets
+full column pruning and predicate pushdown from Catalyst.
 
 At 100 TB the fact tables (lineitem / orders / events / documents) are
-assumed hive-partitioned or bucketed on their natural keys; these readers
-only add schema discipline — partition pruning falls out of Catalyst once
-the layout exists.
+assumed hive-partitioned or bucketed on their natural keys; partition
+pruning falls out of Catalyst once the layout exists.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-# Explicit schemas for the driver-generated tables (TESTDATA.md). Timestamp
+# Column names of the driver-generated tables (TESTDATA.md). Timestamp
 # columns are read as written (ms/ns precision parquet); Spark 4 infers NTZ
 # for non-UTC-adjusted parquet timestamps, which keeps semantics
 # timezone-independent and aligned with the DuckDB oracle.

@@ -26,6 +26,7 @@ partially-written output directory as if the ingest had finished.
 from __future__ import annotations
 
 import atexit
+import hashlib
 import os
 import shutil
 import tempfile
@@ -52,6 +53,14 @@ def scratch_dir(prefix: str) -> str:
     d = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
+
+
+def stable_tag(text: str) -> str:
+    """An 8-hex-digit tag of ``text`` that is the same in every process,
+    for names such as memory-sink query names. ``hash(str)`` is salted
+    per process (PYTHONHASHSEED), so a name built from it changes from
+    run to run."""
+    return hashlib.md5(text.encode()).hexdigest()[:8]
 
 
 def await_or_raise(q: StreamingQuery, timeout_sec: float = 300.0) -> None:

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 from extract_permits_spark.operators.graph import (
     canonical_per_cluster,
     connected_components,
+    symmetric_edges,
 )
 
 
@@ -34,6 +35,41 @@ def test_long_chain_hits_round_cap(spark):
     chain = [(i, i + 1) for i in range(1, 60)]
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(_edges(spark, chain), max_rounds=3)
+
+
+def test_symmetric_edges_plan_the_edge_frame_once(spark, tmp_path):
+    """Both orientations come from ONE copy of the edge plan: a lazy
+    edge frame (here a parquet scan standing in for the near-dup pair
+    join) is scanned once, not once per orientation."""
+    path = str(tmp_path / "edges")
+    _edges(spark, [(1, 2), (2, 3), (3, 1)]).write.parquet(path)
+    edges = spark.read.parquet(path).where(F.col("id_a") > 0)
+    sym = symmetric_edges(edges, "id_a", "id_b")
+    leaves = sym._jdf.queryExecution().optimizedPlan().collectLeaves()
+    assert leaves.size() == 1
+    got = sorted((r.u, r.v) for r in sym.collect())
+    assert got == sorted([(1, 2), (2, 1), (2, 3), (3, 2), (3, 1), (1, 3)])
+
+
+def test_one_round_graph_runs_a_fixed_number_of_jobs(spark):
+    """A graph that converges in one checked round (a triangle plus a
+    pair) runs exactly: 2 jobs for the checkpointed symmetric edge list
+    (its one shuffle stage + the checkpoint) and 7 for round 1, which
+    computes the seed labels too (AQE submits each shuffle and broadcast
+    stage as a job of its own). Building the edge list from two copies
+    of the edge plan, or checkpointing the seed labels in a job of
+    their own, adds jobs."""
+    sc = spark.sparkContext
+    edges = _edges(spark, [(1, 2), (2, 3), (1, 3), (10, 11)])
+    group = "test_one_round_graph_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        comp = connected_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 9
+    got = {r.id: r.component for r in comp.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_canonical_picks_highest_quality_then_lowest_id(spark):

@@ -1,6 +1,8 @@
-"""Every stream ingest registry entry against its DuckDB oracle at
-sf0.001 — the stream ≡ batch claim each entry makes, checked in the
-unit suite with the same value normalization as tools/check_queries.py.
+"""Registry entries against their DuckDB oracles at sf0.001, in the
+unit suite, with the same value normalization as tools/check_queries.py:
+
+- every stream ingest entry (the stream ≡ batch claim each one makes);
+- every entry that closes a near-dup graph with connected components.
 
 Each entry must also leave the session's warehouse directory alone:
 stream results land in the entry's scratch dir (removed at exit), never
@@ -31,6 +33,16 @@ STREAM_ENTRIES = [
     "stream_corpus_ingest",
 ]
 
+CC_ENTRIES = [
+    "llm_corpus_curation",
+    "dedup_cluster_components",
+    "dedup_cluster_canonical",
+    "sample_leakage_safe_split",
+    "docs_corpus_report",
+    "emb_neardup_components",
+    "mm_image_dedup_clusters",
+]
+
 
 @pytest.fixture(scope="module")
 def duck():
@@ -51,8 +63,7 @@ def _listing(spark) -> list[str]:
     return sorted(os.listdir(wh)) if os.path.isdir(wh) else []
 
 
-@pytest.mark.parametrize("name", STREAM_ENTRIES)
-def test_stream_entry_matches_batch_oracle(spark, duck, name):
+def _assert_matches_oracle(spark, duck, name: str) -> None:
     from check_queries import normalize
 
     from extract_permits_spark.plans import analytics
@@ -64,3 +75,13 @@ def test_stream_entry_matches_batch_oracle(spark, duck, name):
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want) > 0
     assert got.equals(want)
+
+
+@pytest.mark.parametrize("name", STREAM_ENTRIES)
+def test_stream_entry_matches_batch_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, name)
+
+
+@pytest.mark.parametrize("name", CC_ENTRIES)
+def test_components_entry_matches_oracle(spark, duck, name):
+    _assert_matches_oracle(spark, duck, name)

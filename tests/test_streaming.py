@@ -910,3 +910,34 @@ def test_ingest_rail_lands_each_batch_once_and_replays_are_noops(spark, tmp_path
     assert not any(
         "ingest_batch_id=7" in d for _, ds, _ in os.walk(out) for d in ds
     )
+
+
+def test_stable_tag_is_the_same_in_every_process():
+    """Memory-sink query names carry stable_tag(sf_dir): a fresh
+    interpreter with a different hash salt must build the same name
+    (str hash() would not), and no registry entry names one with hash()."""
+    import os
+    import subprocess
+    import sys
+
+    from extract_permits_spark.streaming.util import stable_tag
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from extract_permits_spark.streaming.util import stable_tag;"
+        "print(stable_tag('/data/sf0.001'))"
+    )
+    tags = {
+        subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=repo, env=dict(os.environ, PYTHONHASHSEED=seed),
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+        for seed in ("1", "2")
+    }
+    assert tags == {stable_tag("/data/sf0.001")}
+    plans = os.path.join(repo, "extract_permits_spark", "plans")
+    for name in os.listdir(plans):
+        if name.endswith(".py"):
+            with open(os.path.join(plans, name)) as f:
+                assert "hash(sf_dir)" not in f.read(), name
